@@ -88,10 +88,7 @@ def main() -> None:
     # not 2x the suite.
     repeats = max(1, int(os.environ.get("SPARK_GRAFT_REPEATS", "3")))
     REPEAT_FLOOR = 0.2
-    from xngin_spark.operators.dedup import (
-        release_checkpoints,
-        release_persisted,
-    )
+    from xngin_spark.operators.util import release_storage
 
     samples: dict[str, list[float]] = {}
     empty: list[str] = []
@@ -122,19 +119,18 @@ def main() -> None:
             else:
                 sink = df
             sink.write.mode("overwrite").format("noop").save()
+            dt = round(time.perf_counter() - t, 3)
         except Exception as e:  # a failing query must not kill the bench
             print(f"# {name} FAILED: {e}", file=sys.stderr)
             samples.setdefault(name, []).append(-1.0)
             return
-        dt = round(time.perf_counter() - t, 3)
+        finally:
+            # the result is fully materialized (noop sink + observed
+            # count) or the query failed: free everything it persisted
+            # or checkpointed so 200+ queries in one session don't
+            # accumulate storage memory
+            release_storage()
         samples.setdefault(name, []).append(dt)
-        # free any operator-internal caches (e.g. minhash signatures)
-        # and returned-plan checkpoints (graph operators) so 200+
-        # queries in one session don't accumulate storage memory; the
-        # result is fully materialized (noop sink + observed count), so
-        # releasing the checkpoints here is safe
-        release_persisted()
-        release_checkpoints()
         if not record_rows:
             return
         n = obs.get["n"]
@@ -201,6 +197,9 @@ def main() -> None:
     pass_canaries.append(canary_end)
 
     total = round(sum(v for v in timings.values() if v >= 0), 3)
+    # a failed pass adds no time to the total; the query is listed
+    # instead, so a new failure can't read as a speed-up
+    failed = sorted(k for k, v_all in samples.items() if min(v_all) < 0)
     # regression axis across rounds: subtotal over the previous round's
     # query set, so a growing corpus doesn't read as a slowdown
     prev_subtotal = None
@@ -248,6 +247,7 @@ def main() -> None:
         "total_norm_canaries": round(total / canary_mean, 2),
         "queries_norm": queries_norm,
         "empty_results": empty,
+        "failed_queries": failed,
         "n_queries": len(timings),
         "repeats": repeats,
         # round 9: timing materializes via the noop sink instead of

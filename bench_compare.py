@@ -12,7 +12,9 @@ Usage:
 
 Accepts driver-wrapped artifacts ({"parsed": {...}} / {"tail": ...}) and
 raw bench lines/BENCH_FULL.json. Exit code 1 if any regression is
-flagged (usable as a CI gate).
+flagged (usable as a CI gate). A query that ran in the old artifact
+(time >= 0) but failed (-1), is listed in ``failed_queries`` or is
+missing in the new one is always a regression.
 """
 
 from __future__ import annotations
@@ -80,7 +82,14 @@ def main() -> int:
     # jitter can produce (old at its min, new at its max). Artifacts
     # without spreads (pre-r07, single-pass) fall back to threshold-only.
     so, sn = old.get("queries_spread") or {}, new.get("queries_spread") or {}
-    shared = sorted(k for k in qo if k in qn and qo[k] >= 0 and qn[k] >= 0)
+    failed_new = set(new.get("failed_queries") or ())
+    broken = sorted(
+        k for k in qo
+        if qo[k] >= 0 and (qn.get(k, -1) < 0 or k in failed_new)
+    )
+    shared = sorted(
+        k for k in qo if k in qn and qo[k] >= 0 and qn[k] >= 0 and k not in broken
+    )
 
     print(
         f"# canary old={c_old:.3f}s new={c_new:.3f}s "
@@ -131,9 +140,12 @@ def main() -> int:
             f"REGRESSED {k}: {so}s -> {sn}s raw, {r:.2f}x normalized "
             f"(> {args.threshold}x)"
         )
-    if not flagged:
+    for k in broken:
+        state = "missing" if k not in qn else "FAILED"
+        print(f"REGRESSED {k}: {qo[k]}s -> {state}")
+    if not flagged and not broken:
         print("# no normalized regressions")
-    return 1 if flagged else 0
+    return 1 if flagged or broken else 0
 
 
 if __name__ == "__main__":

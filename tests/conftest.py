@@ -78,16 +78,20 @@ def oracle_con():
 
 
 @pytest.fixture(autouse=True)
-def _drain_operator_caches():
-    """Free operator-internal persists and returned-plan checkpoints
-    after every test: a full suite runs 1000+ queries through one JVM,
-    and graph-operator checkpoints (track_checkpoint) have no GC owner
-    until released. Safe here — no plan outlives its test."""
+def _drain_storage():
+    """Free everything the test's thread persisted or checkpointed
+    (operators.util.release_storage), then require that no persisted
+    RDD is left in the JVM: a full suite runs 1000+ queries through one
+    JVM, and storage that outlives its test is a leak. Safe here — no
+    plan outlives its test."""
     yield
-    from xngin_spark.operators.dedup import (
-        release_checkpoints,
-        release_persisted,
-    )
+    from pyspark import SparkContext
 
-    release_persisted()
-    release_checkpoints()
+    from xngin_spark.operators.util import release_storage
+
+    sc = SparkContext._active_spark_context
+    if sc is None:
+        return
+    release_storage()
+    left = sc._jsc.getPersistentRDDs()
+    assert left.size() == 0, f"persisted RDDs left after the test: {left}"

@@ -88,6 +88,22 @@ def test_sub_noise_floor_queries_ignored(tmp_path):
     assert rc == 0
 
 
+def test_failed_or_missing_query_is_a_regression(tmp_path):
+    # a query that ran before must not vanish from the compare when it
+    # now fails (-1), fails in some pass (failed_queries) or is absent
+    for new in (
+        _art({"q": -1.0, "r": 1.0}),
+        _art({"r": 1.0}),
+        dict(_art({"q": 1.0, "r": 1.0}), failed_queries=["q"]),
+    ):
+        rc, out = _run(tmp_path, _art({"q": 0.05, "r": 1.0}), new)
+        assert rc == 1, out
+        assert "REGRESSED q" in out and "REGRESSED r" not in out
+    # already failing in the old artifact: nothing newly broken
+    rc, _ = _run(tmp_path, _art({"q": -1.0, "r": 1.0}), _art({"q": -1.0, "r": 1.0}))
+    assert rc == 0
+
+
 @pytest.mark.skipif(
     os.environ.get("XNGIN_BENCH_GATE") != "1",
     reason="full bench regression gate; opt in with XNGIN_BENCH_GATE=1",

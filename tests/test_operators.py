@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from xngin_spark.operators import dedup as D
 from xngin_spark.operators import multimodal as M
 from xngin_spark.operators import similarity as S
+from xngin_spark.operators.util import checkpoint, release_storage
 
 
 @pytest.fixture(scope="module")
@@ -305,7 +306,8 @@ def test_minhash_lsh_bucket_cap(spark):
     # A planted mega-cluster (identical boilerplate) must not reach the
     # pairing join when max_bucket_size caps it; unrelated near-dup
     # pairs in small buckets survive.
-    from xngin_spark.operators.dedup import minhash_lsh_pairs, release_persisted
+    from xngin_spark.operators.dedup import minhash_lsh_pairs
+    from xngin_spark.operators.util import release_storage
 
     boiler = [(i, "all rights reserved standard license header text here") for i in range(40)]
     near = [
@@ -321,7 +323,7 @@ def test_minhash_lsh_bucket_cap(spark):
     got_capped = {(r.id_a, r.id_b) for r in capped.collect()}
     assert (100, 101) in got_capped  # small-bucket pair survives the cap
     assert not any(a < 40 and b < 40 for a, b in got_capped)
-    release_persisted()
+    release_storage()
 
 
 @pytest.mark.parametrize(
@@ -686,7 +688,7 @@ def test_bloom_no_false_negatives_and_fp_bound(spark):
         F.concat(F.lit("key_"), F.col("id")).alias("k")
     )
     m, k = optimal_params(2000, 0.01)
-    bloom = bloom_build(members, "k", m, k).localCheckpoint(eager=True)
+    bloom = checkpoint(bloom_build(members, "k", m, k))
     missed = (
         bloom_might_contain(members, "k", bloom, m, k)
         .filter(~F.col("might_contain"))
@@ -712,7 +714,7 @@ def test_bloom_probe_plan_is_shuffle_free(spark):
     from xngin_spark.operators.bloom import bloom_build, bloom_might_contain
 
     members = spark.range(0, 500).select(F.col("id").cast("string").alias("k"))
-    bloom = bloom_build(members, "k", 1 << 14, 5).localCheckpoint(eager=True)
+    bloom = checkpoint(bloom_build(members, "k", 1 << 14, 5))
     probe = bloom_might_contain(members, "k", bloom, 1 << 14, 5)
     plan = probe._jdf.queryExecution().executedPlan().toString()
     assert plan.count("BroadcastHashJoin") == 5
@@ -738,7 +740,7 @@ def test_bloom_seen_filter_flags_planted_duplicates(spark, sf_dir):
     cur = d.filter(F.col("doc_id") % 3 != 0).select("text").union(planted)
     n = max(prev.count(), 1)
     m, k = optimal_params(n, 0.01)
-    bloom = bloom_build(prev, "text", m, k).localCheckpoint(eager=True)
+    bloom = checkpoint(bloom_build(prev, "text", m, k))
     flagged = bloom_might_contain(cur, "text", bloom, m, k)
     missed = (
         flagged.join(planted, "text", "leftsemi")
@@ -1017,7 +1019,7 @@ def test_minhash_index_persist_and_screen(spark, tmp_path, docs):
         (r.new_id, r.corpus_id): r.est_jaccard
         for r in D.minhash_screen(new, path, threshold=0.5).collect()
     }
-    D.release_persisted()
+    release_storage()
     # 101 duplicates corpus docs 1/2 exactly -> identical signatures
     assert hits[(101, 1)] == 1.0 and hits[(101, 2)] == 1.0
     assert all(nid != 102 for nid, _ in hits), "novel doc must not match"
@@ -1027,7 +1029,7 @@ def test_minhash_index_persist_and_screen(spark, tmp_path, docs):
         (r.new_id, r.corpus_id)
         for r in D.minhash_screen(new, path, threshold=0.5).collect()
     }
-    D.release_persisted()
+    release_storage()
     assert again == set(hits)
     # an index persisted under a NON-default id column screens with the
     # persist-time name recorded in the meta, not the caller's default
@@ -1039,7 +1041,7 @@ def test_minhash_index_persist_and_screen(spark, tmp_path, docs):
         (r.new_id, r.corpus_id)
         for r in D.minhash_screen(new, path2, threshold=0.5).collect()
     }
-    D.release_persisted()
+    release_storage()
     assert {(101, 1), (101, 2)} <= uid_hits
     # an index without metadata must refuse to screen (guessed banding
     # constants silently match nothing)

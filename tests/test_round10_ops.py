@@ -10,6 +10,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from xngin_spark.operators.util import checkpoint
+
 
 def _rows(df):
     return sorted((tuple(r) for r in df.collect()), key=repr)
@@ -124,7 +126,7 @@ def test_bm25_apply_txn_reads_pre_round10_staged_layout(
     )
     idx = str(tmp_path / "idx")
     bm25_index_persist(v1, idx)
-    diff = table_diff(v1, v2, keys=["doc_id"]).localCheckpoint(eager=True)
+    diff = checkpoint(table_diff(v1, v2, keys=["doc_id"]))
 
     # stage under the NEW layout, then rewrite it into the OLD layout
     # and crash before any apply — simulating a pre-upgrade crash

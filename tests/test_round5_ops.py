@@ -402,14 +402,14 @@ class TestStarContraction:
 def test_no_persisted_storage_accumulates_across_query_families(spark, sf_dir):
     """Soak guard: one session running the persist-heavy families
     back-to-back (minhash, winnow, pipeline CC, star CC, k-means IVF)
-    must not accumulate block-manager storage once release_persisted()
+    must not accumulate block-manager storage once release_storage()
     runs — the bench and any long-lived service run exactly this loop."""
     import xngin_spark.queries as Q
-    from xngin_spark.operators.dedup import release_persisted
+    from xngin_spark.operators.util import release_storage
 
     Q.load_all()
     sc = spark.sparkContext
-    release_persisted()
+    release_storage()
     before = sc._jsc.sc().getPersistentRDDs().size()
     for name in (
         "dedup_minhash_lsh",
@@ -418,14 +418,11 @@ def test_no_persisted_storage_accumulates_across_query_families(spark, sf_dir):
         "knn_cosine_ivf",
     ):
         Q.QUERIES[name](spark, sf_dir).count()
-        release_persisted()
+        release_storage()
     leftover = sc._jsc.sc().getPersistentRDDs().size()
-    # measured as GROWTH over the session's pre-existing storage (other
-    # tests in the shared session leave their own final-iteration
-    # localCheckpoints): the only legitimate survivors of THIS loop are
-    # the just-materialized CC/k-means checkpoints; anything growing
-    # per-query would show up far above this
-    assert leftover - before <= 6, (
+    # the drain frees every frame the queries persisted or checkpointed,
+    # returned-plan checkpoints included: nothing may survive the loop
+    assert leftover == before, (
         f"storage grew {before} -> {leftover} across the query loop"
     )
 

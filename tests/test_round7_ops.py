@@ -20,6 +20,7 @@ from xngin_spark.operators.bloom import bloom_build, bloom_might_contain
 from xngin_spark.operators.corpus import rrf_fuse
 from xngin_spark.operators.quantize import jl_project
 from xngin_spark.operators.textstats import hashed_linear_score
+from xngin_spark.operators.util import checkpoint
 
 
 def test_portable_bloom_no_false_negatives(spark):
@@ -30,9 +31,7 @@ def test_portable_bloom_no_false_negatives(spark):
         [(f"other-{i}",) for i in range(500)], "k string"
     )
     m, k = 1 << 14, 7
-    bloom = bloom_build(members, "k", m, k, portable=True).localCheckpoint(
-        eager=True
-    )
+    bloom = checkpoint(bloom_build(members, "k", m, k, portable=True))
     hits = (
         bloom_might_contain(members, "k", bloom, m, k, portable=True)
         .filter(~F.col("might_contain"))
@@ -84,7 +83,7 @@ def test_jl_projection_map_side_plan(spark, sf_dir):
     sig = plan_signature(jl_project(emb))
     assert sig.get("Exchange", 0) <= 2
     assert sig.get("BatchEvalPython", 0) == 0 and sig.get("ArrowEvalPython", 0) == 0
-    pre_spread = emb.repartition(64).localCheckpoint(eager=True)
+    pre_spread = checkpoint(emb.repartition(64))
     assert plan_signature(jl_project(pre_spread)).get("Exchange", 0) == 0
 
 
@@ -384,10 +383,9 @@ def test_streaming_ingest_admit_index_follows_stream(spark, sf_dir, tmp_path):
     from xngin_spark.streaming import documents_stream
     from xngin_spark.streaming.sinks import streaming_ingest_admit
 
-    docs = (
+    docs = checkpoint(
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .select("doc_id", "text", "lang", "source", "n_chars")
-        .localCheckpoint(eager=True)
     )
     seed = docs.filter(F.col("doc_id") >= 400)
     idx = str(tmp_path / "idx")
@@ -439,9 +437,7 @@ def test_streaming_ingest_admit_index_follows_stream(spark, sf_dir, tmp_path):
             .select(F.col("new_id").alias("doc_id"))
             .distinct()
         )
-        keep = b.join(F.broadcast(dup), "doc_id", "left_anti").localCheckpoint(
-            eager=True
-        )
+        keep = checkpoint(b.join(F.broadcast(dup), "doc_id", "left_anti"))
         expect |= {r["doc_id"] for r in keep.select("doc_id").collect()}
         corpus = corpus.unionByName(keep)
     assert got == expect, f"stream admitted {got ^ expect} differently"
@@ -474,10 +470,9 @@ def test_streaming_vector_ingest_admit(spark, sf_dir, tmp_path):
     from xngin_spark.streaming import embeddings_stream
     from xngin_spark.streaming.sinks import streaming_vector_ingest_admit
 
-    emb = (
+    emb = checkpoint(
         spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         .select("vec_id", "embedding", "label")
-        .localCheckpoint(eager=True)
     )
     seed = emb.filter(F.col("vec_id") >= 300)
     idx = str(tmp_path / "ivf")
@@ -807,7 +802,7 @@ def test_streaming_rollup_batch_replay_converges(spark, tmp_path):
     agg_snapshot(v1, "g", "v").select(
         "g", "cnt", F.col("total_dec").cast("decimal(30,6)").alias("total_dec")
     ).write.parquet(f"{rollup}/epoch=-1")
-    changes = cdc_changes(v1, v2, ["k"], cols=["g", "v"]).localCheckpoint()
+    changes = checkpoint(cdc_changes(v1, v2, ["k"], cols=["g", "v"]))
     b0 = changes.filter(F.col("k") % 2 == 0)
     b1 = changes.filter(F.col("k") % 2 == 1)
 
@@ -869,7 +864,7 @@ def test_streaming_rollup_prunes_unreachable_epochs(spark, tmp_path):
     agg_snapshot(v1, "g", "v").select(
         "g", "cnt", F.col("total_dec").cast("decimal(30,6)").alias("total_dec")
     ).write.parquet(f"{rollup}/epoch=-1")
-    changes = cdc_changes(v1, v2, ["k"], cols=["g", "v"]).localCheckpoint()
+    changes = checkpoint(cdc_changes(v1, v2, ["k"], cols=["g", "v"]))
     for b in range(3):
         apply_cdc_rollup_batch(
             changes.filter(F.col("k") % 3 == b), b, rollup, "g", "v", ["k"]
@@ -954,7 +949,7 @@ def test_maintain_agg_recompute_prunes_partitioned_snapshot(spark, tmp_path):
     v2 = spark.read.parquet(str(tmp_path / "v2"))
     out = maintain_agg(
         agg_snapshot(v1, "g", "v"),
-        cdc_changes(v1, v2, ["k"], cols=["g", "v"]).localCheckpoint(),
+        checkpoint(cdc_changes(v1, v2, ["k"], cols=["g", "v"])),
         v2,
         "g",
         "v",
@@ -1159,7 +1154,7 @@ def test_streaming_rollup_random_batches_and_replays(spark, tmp_path):
     agg_snapshot(v1, "g", "v").select(
         "g", "cnt", F.col("total_dec").cast("decimal(30,6)").alias("total_dec")
     ).write.parquet(f"{rollup}/epoch=-1")
-    changes = cdc_changes(v1, v2, ["k"], cols=["g", "v"]).localCheckpoint()
+    changes = checkpoint(cdc_changes(v1, v2, ["k"], cols=["g", "v"]))
     nb = 5
     for b in range(nb):
         batch = changes.filter(F.pmod(F.xxhash64("k"), F.lit(nb)) == b)
@@ -1264,7 +1259,7 @@ def test_scd2_to_cdc_to_maintained_rollup_end_to_end(spark, tmp_path):
 
     v1 = scd2_snapshot(spark, path, as_of=150).select("k", "seg", "bal")
     v2 = scd2_snapshot(spark, path, as_of=250).select("k", "seg", "bal")
-    changes = cdc_changes(v1, v2, ["k"], cols=["seg", "bal"]).localCheckpoint()
+    changes = checkpoint(cdc_changes(v1, v2, ["k"], cols=["seg", "bal"]))
     out = maintain_agg(
         agg_snapshot(v1, "seg", "bal"), changes, v2, "seg", "bal"
     )
@@ -1313,7 +1308,7 @@ def test_maintain_agg_multi_matches_recompute(spark):
     v2 = spark.createDataFrame(v2_rows, schema)
     out = maintain_agg_multi(
         agg_snapshot_multi(v1, "g", ["a", "b"]),
-        cdc_changes(v1, v2, ["k"], cols=["g", "a", "b"]).localCheckpoint(),
+        checkpoint(cdc_changes(v1, v2, ["k"], cols=["g", "a", "b"])),
         v2,
         "g",
         ["a", "b"],

@@ -13,6 +13,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from xngin_spark.operators.util import checkpoint
 from xngin_spark.server import protocol as P
 
 
@@ -185,11 +186,10 @@ def test_vector_ingest_admit_seeds_missing_index(spark, sf_dir, tmp_path):
     from xngin_spark.streaming import embeddings_stream
     from xngin_spark.streaming.sinks import streaming_vector_ingest_admit
 
-    emb = (
+    emb = checkpoint(
         spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         .select("vec_id", "embedding", "label")
         .filter(F.col("vec_id") < 40)
-        .localCheckpoint(eager=True)
     )
     feed = str(tmp_path / "feed")
     os.makedirs(feed)
@@ -287,7 +287,7 @@ def test_reflect_checkpoint_renders_through_barrier(spark, sf_dir):
         .groupBy("n_regionkey")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    bare = agg2.localCheckpoint(eager=True).filter(F.col("n") > 0)
+    bare = checkpoint(agg2).filter(F.col("n") > 0)
     with pytest.raises(Unreflectable):
         roundtrip_equivalent(bare)
 
@@ -612,11 +612,11 @@ def test_maintain_agg_planted_hot_group_stays_balanced(spark):
         F.concat(F.lit("g"), (F.col("id") % 200).cast("string")).alias("g"),
         (F.col("id") % 89).cast("double").alias("v"),
     )
-    v1 = hot.unionByName(cold).localCheckpoint(eager=True)
+    v1 = checkpoint(hot.unionByName(cold))
     # delta: delete half the hot group (forces recompute OF the hot
     # group — the worst case: the affected set's biggest group), plus
     # scattered cold updates
-    v2 = (
+    v2 = checkpoint(
         v1.filter(~((F.col("g") == "hot") & (F.col("k") % 2 == 0)))
         .withColumn(
             "v",
@@ -624,13 +624,10 @@ def test_maintain_agg_planted_hot_group_stays_balanced(spark):
                 F.col("v")
             ),
         )
-        .localCheckpoint(eager=True)
     )
     out = maintain_agg(
         agg_snapshot(v1, "g", "v"),
-        cdc_changes(v1, v2, ["k"], cols=["g", "v"]).localCheckpoint(
-            eager=True
-        ),
+        checkpoint(cdc_changes(v1, v2, ["k"], cols=["g", "v"])),
         v2,
         "g",
         "v",
@@ -688,7 +685,7 @@ def test_streaming_rollup_cold_restart_converges(spark, tmp_path):
     delta = os.path.join(root, "delta")
     rollup = os.path.join(root, "rollup")
     ckpt = os.path.join(root, "ckpt")
-    changes = cdc_changes(v1, v2, ["k"], cols=["g", "v"]).localCheckpoint()
+    changes = checkpoint(cdc_changes(v1, v2, ["k"], cols=["g", "v"]))
     for i in range(3):
         changes.filter(F.col("k") % 3 == i).coalesce(1).write.mode(
             "append"
@@ -888,7 +885,7 @@ def test_streaming_rollup_multi_replay_and_recompute(spark, tmp_path):
         F.col("total_dec_a").cast("decimal(30,6)").alias("total_dec_a"),
         F.col("total_dec_b").cast("decimal(30,6)").alias("total_dec_b"),
     ).write.parquet(f"{rollup}/epoch=-1")
-    changes = cdc_changes(v1, v2, ["k"], cols=["g", "a", "b"]).localCheckpoint()
+    changes = checkpoint(cdc_changes(v1, v2, ["k"], cols=["g", "a", "b"]))
     b0 = changes.filter(F.col("k") % 2 == 0)
     b1 = changes.filter(F.col("k") % 2 == 1)
     apply_cdc_rollup_batch_multi(b0, 0, rollup, "g", ["a", "b"], ["k"])
@@ -1199,7 +1196,7 @@ def test_bm25_batch_replay_idempotent(spark, sf_dir, tmp_path):
     )
     idx = str(tmp_path / "idx")
     bm25_index_persist(v1, idx)
-    changes = cdc_changes(v1, v2, ["doc_id"], cols=["text"]).localCheckpoint()
+    changes = checkpoint(cdc_changes(v1, v2, ["doc_id"], cols=["text"]))
     b0 = changes.filter(F.col("doc_id") % 2 == 0)
     b1 = changes.filter(F.col("doc_id") % 2 == 1)
 

@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tests.test_round8_ops import _bm25_index_rows, _register_tpch_views
+from xngin_spark.operators.util import checkpoint, release_storage
 
 
 def _rows(df):
@@ -159,7 +160,7 @@ def test_bm25_update_replay_converges_after_midbatch_crash(
     v1, v2 = _bm25_versions(spark, sf_dir)
     idx = str(tmp_path / "idx")
     bm25_index_persist(v1, idx)
-    diff = table_diff(v1, v2, keys=["doc_id"]).localCheckpoint(eager=True)
+    diff = checkpoint(table_diff(v1, v2, keys=["doc_id"]))
 
     real_scrub = dml.scrub_append_rows
     calls = {"n": 0}
@@ -375,13 +376,15 @@ def test_bm25_churn_file_count_bounded(spark, sf_dir, tmp_path):
         keep = d.filter((F.col("doc_id") + i) % 7 != 0).filter(
             F.col("doc_id") < 120
         )
-        return keep.withColumn(
-            "text",
-            F.when(
-                F.col("doc_id") % 5 == i % 5,
-                F.concat(F.col("text"), F.lit(f" v{i}")),
-            ).otherwise(F.col("text")),
-        ).localCheckpoint(eager=True)
+        return checkpoint(
+            keep.withColumn(
+                "text",
+                F.when(
+                    F.col("doc_id") % 5 == i % 5,
+                    F.concat(F.col("text"), F.lit(f" v{i}")),
+                ).otherwise(F.col("text")),
+            )
+        )
 
     idx = str(tmp_path / "idx")
     prev = version(0)
@@ -425,18 +428,15 @@ def test_ivf_churn_per_partition_files_bounded(spark, sf_dir, tmp_path):
     from xngin_spark.operators import clustering as C
     from xngin_spark.sources.dml import table_diff
 
-    emb = (
+    emb = checkpoint(
         spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         .select("vec_id", "embedding")
         .filter(F.col("vec_id") < 400)
-        .localCheckpoint(eager=True)
     )
     cents = C.kmeans_fit(emb.orderBy("vec_id"), 4, "embedding", max_iter=2)
 
     def version(i: int):
-        return emb.filter((F.col("vec_id") + i) % 9 != 0).localCheckpoint(
-            eager=True
-        )
+        return checkpoint(emb.filter((F.col("vec_id") + i) % 9 != 0))
 
     idx = str(tmp_path / "ivf")
     prev = version(0)
@@ -471,11 +471,10 @@ def test_tune_nprobe_curve_matches_rerunning_ivf(spark, sf_dir):
     from xngin_spark.operators import clustering as C
     from xngin_spark.operators.similarity import cosine_topk
 
-    emb = (
+    emb = checkpoint(
         spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         .select("vec_id", "embedding")
         .filter(F.col("vec_id") < 300)
-        .localCheckpoint(eager=True)
     )
     queries = emb.filter(F.col("vec_id") < 4).select(
         F.col("vec_id").alias("qid"), "embedding"
@@ -543,10 +542,7 @@ def test_winnow_cap_collapse_warns_not_silent(spark):
     duplicates'."""
     import warnings
 
-    from xngin_spark.operators.dedup import (
-        release_persisted,
-        winnow_candidate_pairs,
-    )
+    from xngin_spark.operators.dedup import winnow_candidate_pairs
 
     base = "the quick brown fox jumps over the lazy dog again and again"
     rows = [(i, f"{base} variant {i % 3}") for i in range(60)]
@@ -555,7 +551,7 @@ def test_winnow_cap_collapse_warns_not_silent(spark):
         warnings.simplefilter("always")
         out = winnow_candidate_pairs(d, max_fp_docs=4, min_shared=1)
         n = out.count()
-    release_persisted()
+    release_storage()
     assert n == 0
     assert any("max_fp_docs" in str(w.message) for w in caught), (
         "cap collapse did not warn"
@@ -570,7 +566,7 @@ def test_winnow_cap_collapse_warns_not_silent(spark):
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
         winnow_candidate_pairs(healthy, min_shared=1).count()
-    release_persisted()
+    release_storage()
     assert not any("max_fp_docs" in str(w.message) for w in caught)
 
 
@@ -1079,20 +1075,17 @@ def test_kcore_fixpoint_within_budget(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from xngin_spark.operators.corpus import kcore_peel
-    from xngin_spark.operators.dedup import (
-        release_persisted,
-        winnow_candidate_pairs,
-    )
+    from xngin_spark.operators.dedup import winnow_candidate_pairs
 
     d = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .filter(F.col("doc_id") < 1000)
     )
-    pairs = winnow_candidate_pairs(d, min_shared=5).localCheckpoint(eager=True)
+    pairs = checkpoint(winnow_candidate_pairs(d, min_shared=5))
     e = pairs.select(F.col("doc_a").alias("lo"), F.col("doc_b").alias("hi"))
     a = _rows(kcore_peel(e, k=3, rounds=16))
     b = _rows(kcore_peel(e, k=3, rounds=17))
-    release_persisted()
+    release_storage()
     assert a == b and a, "peel did not converge within the 16-round budget"
 
 

@@ -300,7 +300,7 @@ def main() -> None:
     import xngin_spark.operators.corpus as C
     import xngin_spark.operators.similarity as S
     from xngin_spark import queries as Q
-    from xngin_spark.operators.dedup import release_checkpoints, release_persisted
+    from xngin_spark.operators.util import release_storage
     from xngin_spark.session import get_spark
 
     rounds = int(sys.argv[1]) if len(sys.argv) > 1 else 4
@@ -366,8 +366,7 @@ def main() -> None:
                     rec[f"{tag}_jobs"] = jobs() - j0
                 finally:
                     set_variant("new")
-                    release_persisted()
-                    release_checkpoints()
+                    release_storage()
             if rnd > 0:
                 rows.append(rec)
             print(f"{name} r{rnd}: {rec}", flush=True)

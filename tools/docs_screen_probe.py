@@ -6,7 +6,7 @@ def main():
     passes = int(sys.argv[1]) if len(sys.argv) > 1 else 6
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from xngin_spark import queries as Q
-    from xngin_spark.operators.dedup import release_checkpoints, release_persisted
+    from xngin_spark.operators.util import release_storage
     from xngin_spark.session import get_spark
     Q.load_all()
     spark = get_spark("docs_screen_probe")
@@ -27,7 +27,7 @@ def main():
         t1 = time.perf_counter()   # construct = checkpoint + stream run (all inside)
         df.write.mode("overwrite").format("noop").save()
         t2 = time.perf_counter()
-        release_persisted(); release_checkpoints()
+        release_storage()
         batches = progress[n0:]
         print(f"pass {i}: construct+run={t1-t0:.3f}s noop={t2-t1:.3f}s batches={len(batches)}", flush=True)
         for b in batches:

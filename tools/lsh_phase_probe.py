@@ -21,15 +21,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def run(spark, sf_dir: str) -> dict:
     from pyspark.sql import functions as F
-    from pyspark.storagelevel import StorageLevel
 
     from xngin_spark.operators.dedup import (
         _band_buckets,
         _sig_agreement,
         minhash_signatures,
-        release_persisted,
-        track_persisted,
     )
+    from xngin_spark.operators.util import persist, release_storage
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
@@ -37,18 +35,12 @@ def run(spark, sf_dir: str) -> dict:
     out: dict = {"sf_dir": sf_dir, "n_docs": d.count()}
 
     t0 = time.perf_counter()
-    sigs = track_persisted(
-        minhash_signatures(d).persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    sigs = persist(minhash_signatures(d))
     sigs.count()
     out["t_signatures"] = round(time.perf_counter() - t0, 2)
 
     t0 = time.perf_counter()
-    banded = track_persisted(
-        _band_buckets(sigs, "doc_id", 64, 16).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-    )
+    banded = persist(_band_buckets(sigs, "doc_id", 64, 16))
     out["n_banded"] = banded.count()
     out["t_banding"] = round(time.perf_counter() - t0, 2)
 
@@ -75,12 +67,11 @@ def run(spark, sf_dir: str) -> dict:
     t0 = time.perf_counter()
     a = banded.select("band", "bucket", F.col("doc_id").alias("id_a"))
     b = banded.select("band", "bucket", F.col("doc_id").alias("id_b"))
-    cand = (
+    cand = persist(
         a.join(b, on=["band", "bucket"])
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     out["n_candidates"] = cand.count()
     out["t_candidates"] = round(time.perf_counter() - t0, 2)
@@ -98,8 +89,7 @@ def run(spark, sf_dir: str) -> dict:
     )
     out["t_verify"] = round(time.perf_counter() - t0, 2)
 
-    cand.unpersist()
-    release_persisted()
+    release_storage()
     return out
 
 

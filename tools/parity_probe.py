@@ -306,22 +306,15 @@ def main() -> int:
                     outcome = f"ERROR({_classify(err)})"
         if outcome != "OK":
             failed.append(name)
-        # release per-row storage BEFORE the next row: operator persists,
-        # dedup-tracked checkpoints, and (via gc -> ContextCleaner) the
-        # anonymous localCheckpoints the CDC rows hold — at sf100 the
-        # incremental_agg_multi checkpoint+shuffle footprint is ~45 GB
-        # of spark-local that otherwise coexists with the NEXT row's
-        # oracle spill (the disk death the round-10 sweep hit twice)
-        try:
-            from xngin_spark.operators.dedup import (
-                release_checkpoints,
-                release_persisted,
-            )
+        # release per-row storage BEFORE the next row: every frame the
+        # row persisted or checkpointed, and (via gc -> ContextCleaner)
+        # its shuffle files — at sf100 the incremental_agg_multi
+        # checkpoint+shuffle footprint is ~45 GB of spark-local that
+        # otherwise coexists with the NEXT row's oracle spill (the disk
+        # death the round-10 sweep hit twice)
+        from xngin_spark.operators.util import release_storage
 
-            release_persisted()
-            release_checkpoints()
-        except Exception:
-            pass
+        release_storage()
         import gc
 
         gc.collect()

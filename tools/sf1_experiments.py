@@ -113,27 +113,23 @@ def melt_constraint_check(spark, sf_dir):
 def setsim_persist(spark, sf_dir, threshold=0.9):
     """setsim_prefix_join with toks/per_doc persisted (the r11
     experiment), over the FULL corpus."""
-    from pyspark import StorageLevel
-
-    import xngin_spark.operators.dedup as D
     from xngin_spark.operators.textstats import tokens
-    from xngin_spark.operators.util import fan_out
+    from xngin_spark.operators.util import fan_out, persist
     from xngin_spark.queries.tpch import T
 
     df = T(spark, sf_dir, "documents")
     id_col, text_col = "doc_id", "text"
-    toks = (
+    toks = persist(
         fan_out(df)
         .select(
             F.col(id_col).alias("id"),
             F.array_distinct(tokens(F.col(text_col))).alias("ta"),
         )
         .filter(F.size("ta") > 0)
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     ex = toks.select("id", F.explode("ta").alias("tok"))
     dfreq = ex.groupBy("tok").agg(F.count(F.lit(1)).cast("long").alias("df"))
-    per_doc = (
+    per_doc = persist(
         ex.join(dfreq, "tok")
         .groupBy("id")
         .agg(
@@ -153,10 +149,7 @@ def setsim_persist(spark, sf_dir, threshold=0.9):
                 ).cast("int"),
             ).alias("prefix"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    D.track_persisted(toks)
-    D.track_persisted(per_doc)
     pa = per_doc.select(
         F.col("id").alias("id_a"), F.col("sz").alias("la"),
         F.explode("prefix").alias("p"),
@@ -202,11 +195,8 @@ def main() -> None:
     rounds = int(sys.argv[2]) if len(sys.argv) > 2 else 4
     only = set(sys.argv[3:])
     from xngin_spark import queries as Q
-    from xngin_spark.operators.dedup import (
-        release_checkpoints,
-        release_persisted,
-        setsim_prefix_join,
-    )
+    from xngin_spark.operators.dedup import setsim_prefix_join
+    from xngin_spark.operators.util import release_storage
     from xngin_spark.queries.tpch import T
     from xngin_spark.session import get_spark
 
@@ -258,8 +248,7 @@ def main() -> None:
                 t0 = time.perf_counter()
                 builder().write.mode("overwrite").format("noop").save()
                 rec[tag] = round(time.perf_counter() - t0, 3)
-                release_persisted()
-                release_checkpoints()
+                release_storage()
             if rnd > 0:
                 rows.append(rec)
             print(f"{name} r{rnd}: {rec}", flush=True)

@@ -32,7 +32,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     import xngin_spark.streaming.stateful as ST
     from xngin_spark import queries as Q
-    from xngin_spark.operators.dedup import release_checkpoints, release_persisted
+    from xngin_spark.operators.util import release_storage
     from xngin_spark.session import get_spark
 
     Q.load_all()
@@ -82,8 +82,7 @@ def main() -> None:
                     rec[f"{tag}_addBatchMs"] = sum(add)
                 finally:
                     ST._project = real_project
-                    release_persisted()
-                    release_checkpoints()
+                    release_storage()
             if rnd > 0:
                 rows.append(rec)
             print(f"{name} r{rnd}: {rec}", flush=True)

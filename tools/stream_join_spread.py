@@ -27,7 +27,7 @@ def main() -> None:
     passes = int(sys.argv[1]) if len(sys.argv) > 1 else 8
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from xngin_spark import queries as Q
-    from xngin_spark.operators.dedup import release_checkpoints, release_persisted
+    from xngin_spark.operators.util import release_storage
     from xngin_spark.session import get_spark
 
     Q.load_all()
@@ -64,8 +64,7 @@ def main() -> None:
         df = Q.QUERIES["events_stream_join"](spark, sf_dir)
         df.write.mode("overwrite").format("noop").save()
         wall = round(time.perf_counter() - t0, 3)
-        release_persisted()
-        release_checkpoints()
+        release_storage()
         walls.append(wall)
         batches = progress[n0:]
         summary = [

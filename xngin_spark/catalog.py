@@ -171,12 +171,3 @@ def events_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     return df
 
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Plain dict of DataFrames for query callables that don't need views."""
-    out: dict[str, DataFrame] = {}
-    for name in ALL_TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            out[name] = spark.read.parquet(path)
-    return out

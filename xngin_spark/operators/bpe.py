@@ -41,6 +41,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from xngin_spark.operators.util import checkpoint, release_checkpoint, values_df
+
 
 def word_freq_table(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(word, freq) over whitespace tokens — the one full-corpus pass."""
@@ -164,7 +166,7 @@ def learn(
     # probe shipped up to cap+1 SYMBOL ARRAYS to the driver even when
     # the corpus was ABOVE the cap, a ~hundreds-of-MB driver allocation
     # made just to decide to go distributed (r11 verdict scale risk).
-    symtab0 = init_symbols(word_freq_table(docs, text_col)).localCheckpoint()
+    symtab0 = checkpoint(init_symbols(word_freq_table(docs, text_col)))
     n_words = symtab0.limit(driver_cap + 1).count()
     if n_words <= driver_cap:
         probe = symtab0.select("syms", "freq").toPandas()
@@ -174,14 +176,10 @@ def learn(
     else:
         rows = _distributed_learn(symtab0, merges, checkpointed=True)
     # rows are plain Python now — the checkpoint's blocks are dead
-    from xngin_spark.operators.util import release_checkpoint
-
     release_checkpoint(symtab0)
     # values_df, not createDataFrame: downstream bench actions over a
     # python local relation each pay a ~4s python->JVM stage
     # (operators/util.values_df); merge lists are small by construction
-    from xngin_spark.operators.util import values_df
-
     return values_df(
         spark,
         "rank INT, left_sym STRING, right_sym STRING, "
@@ -196,7 +194,8 @@ def _distributed_learn(
     """The above-cap merge loop: per round one pair-count shuffle, one
     top-1 collect, one checkpointed JVM fold (unchanged semantics)."""
     if not checkpointed:
-        symtab = symtab.localCheckpoint()
+        symtab = checkpoint(symtab)
+    first = symtab
     rows: list[tuple] = []
     for rank in range(1, merges + 1):
         top = (
@@ -210,7 +209,9 @@ def _distributed_learn(
             break
         l, r, c = top["left_sym"], top["right_sym"], int(top["pair_count"])
         rows.append((rank, l, r, l + r, c))
-        symtab = apply_merge(symtab, l, r).localCheckpoint()
+        prev, symtab = symtab, checkpoint(apply_merge(symtab, l, r))
+        if prev is not first:  # the eager checkpoint consumed it
+            release_checkpoint(prev)
     return rows
 
 

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from xngin_spark.operators.util import fan_out, release_checkpoint
+from xngin_spark.operators.util import checkpoint, fan_out, release_checkpoint
 
 
 def _lit_vec(vals) -> F.Column:
@@ -212,7 +212,7 @@ def kmeans_fit(
         rows = vecs.orderBy(F.xxhash64(F.col("v").cast("string"))).collect()
         X = np.array([r.v for r in rows], dtype=np.float64)
         return _lloyd_numpy(X, k, max_iter, tol)
-    vecs = fan_out(vecs).localCheckpoint(eager=True)
+    vecs = checkpoint(fan_out(vecs))
     centroids = [
         [float(x) for x in r.v]
         for r in vecs.toDF("v").orderBy(F.xxhash64(F.col("v").cast("string"))).limit(k).collect()
@@ -479,10 +479,8 @@ def ivf_index_update(
     lands in; partition pruning on probes is untouched."""
     spark = new_snapshot.sparkSession
 
-    gone = (
-        diff.filter(F.col(op_col).isin("delete", "update"))
-        .select(id_col)
-        .localCheckpoint(eager=True)
+    gone = checkpoint(
+        diff.filter(F.col(op_col).isin("delete", "update")).select(id_col)
     )
     fresh_ids = diff.filter(F.col(op_col).isin("insert", "update")).select(
         id_col
@@ -610,7 +608,7 @@ def pq_fit(
             )
         ).alias("e")
     ).select(F.col("e.s").alias("s"), F.col("e.v").alias("v"))
-    subs = subs.localCheckpoint(eager=True)  # explode once, iterate many
+    subs = checkpoint(subs)  # explode once, iterate many
 
     from pyspark.sql import Window
 

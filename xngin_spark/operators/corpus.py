@@ -22,7 +22,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from xngin_spark.operators.textstats import TOKEN_SEP, tokens
-from xngin_spark.operators.util import fan_out, release_checkpoint, values_df
+from xngin_spark.operators.util import (
+    checkpoint,
+    fan_out,
+    release_checkpoint,
+    values_df,
+)
 
 
 def token_ngrams(toks: Column, n: int = 3) -> Column:
@@ -343,12 +348,9 @@ def bm25_topk(
     # one-row cross join instead of a driver-blocking .first(): one
     # fewer serialized driver round-trip, bit-identical values (COUNT/
     # AVG land in the same doubles whether collected or joined).
-    from xngin_spark.operators.dedup import track_checkpoint
-
-    tf = track_checkpoint(
+    tf = checkpoint(
         pairs.groupBy(id_col, "tok")
         .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-        .localCheckpoint(eager=True)
     )
     dl = tf.groupBy(id_col).agg(F.sum("tf").cast("long").alias("dl"))
     stats = dl.agg(
@@ -438,10 +440,9 @@ def bm25_index_persist(
         )
         .filter(F.col("tok").isNotNull())
     )
-    tf = (
+    tf = checkpoint(  # feeds all three index tables
         pairs.groupBy(id_col, "tok")
         .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-        .localCheckpoint(eager=True)  # feeds all three index tables
     )
     dl = tf.groupBy(id_col).agg(F.sum("tf").cast("long").alias("dl"))
     # The three table writes and the stats aggregate are INDEPENDENT
@@ -486,8 +487,6 @@ def bm25_index_persist(
     # every consumer of the checkpointed postings has materialized —
     # free the blocks instead of pinning one corpus-sized frame per
     # index build in a long-lived session
-    from xngin_spark.operators.util import release_checkpoint
-
     release_checkpoint(tf)
 
 
@@ -689,13 +688,13 @@ def bm25_index_update(
     _t = _time.time()  # phase marks (micro-batch floor itemization)
     # scrub EVERY batch key, not just delete/update: presence-based
     # adjustments make redelivered inserts cancel instead of double-count
-    batch_ids = diff.select(id_col).distinct().localCheckpoint(eager=True)
+    batch_ids = checkpoint(diff.select(id_col).distinct())
     fresh_ids = diff.filter(F.col(op_col).isin("insert", "update")).select(
         id_col
     )
 
     changed = new_snapshot.join(F.broadcast(fresh_ids), id_col)
-    new_tf = (
+    new_tf = checkpoint(
         fan_out(changed)
         .select(
             F.col(id_col),
@@ -704,11 +703,10 @@ def bm25_index_update(
         .filter(F.col("tok").isNotNull())
         .groupBy(id_col, "tok")
         .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-        .localCheckpoint(eager=True)
     )
-    new_dl = new_tf.groupBy(id_col).agg(
-        F.sum("tf").cast("long").alias("dl")
-    ).localCheckpoint(eager=True)
+    new_dl = checkpoint(
+        new_tf.groupBy(id_col).agg(F.sum("tf").cast("long").alias("dl"))
+    )
     fresh_stats = new_dl.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("s"),
@@ -736,12 +734,11 @@ def bm25_index_update(
     n_old, old_dl_sum = int(old_present["n"]), int(old_present["s"])
 
     # signed df delta per token; only these tokens' termstats rows move
-    df_delta = (
+    df_delta = checkpoint(
         new_tf.select("tok", F.lit(1).alias("d"))
         .unionByName(old_post.select("tok", F.lit(-1).alias("d")))
         .groupBy("tok")
         .agg(F.sum("d").cast("long").alias("d"))
-        .localCheckpoint(eager=True)
     )
     merged = (
         spark.read.parquet(f"{index_path}/termstats")
@@ -1138,7 +1135,7 @@ def pagerank_fixed(
     round; ranks localCheckpoint per iteration so lineage stays O(1).
     """
     base = 1.0 - damping
-    e = edges.localCheckpoint(eager=True)
+    e = checkpoint(edges)
     # small graphs run the replicated-arithmetic driver loop (the
     # _driver_components pattern; see _driver_pagerank for the
     # bit-exactness argument). Long ids only — the replication relies
@@ -1152,16 +1149,14 @@ def pagerank_fixed(
             return _driver_pagerank(e, node_ids, id_col, iters, damping)
         finally:
             release_checkpoint(e)
-    outdeg = (
+    outdeg = checkpoint(
         e.groupBy("src")
         .agg(F.count(F.lit(1)).cast("long").alias("outdeg"))
-        .localCheckpoint(eager=True)
     )
-    ranks = (
+    ranks = checkpoint(
         nodes.select(F.col(id_col).alias("nid"))
         .distinct()
         .withColumn("r", F.lit(1.0))
-        .localCheckpoint(eager=True)
     )
     n_nodes = float(ranks.count())
     for _ in range(iters):
@@ -1192,7 +1187,7 @@ def pagerank_fixed(
                 ).alias("dshare")
             )
         )
-        ranks = (
+        ranks = checkpoint(
             ranks.select("nid")
             .join(sums, "nid", "left")
             .crossJoin(F.broadcast(dang))
@@ -1205,7 +1200,6 @@ def pagerank_fixed(
                     8,
                 ).alias("r"),
             )
-            .localCheckpoint(eager=True)
         )
     return ranks.select(
         F.col("nid").alias(id_col), F.col("r").alias("rank_score")
@@ -1247,15 +1241,14 @@ def connected_components(
     # decide the strategy from its exact size: under driver_cap the
     # whole component structure fits driver memory and union-find beats
     # any number of distributed rounds (see _driver_components)
-    E = edges.selectExpr("src", "dst").localCheckpoint(eager=True)
+    E = checkpoint(edges.selectExpr("src", "dst"))
     if E.count() <= driver_cap:
         try:
             return _driver_components(E, nodes, id_col)
         finally:
             release_checkpoint(E)
-    sym = (
+    sym = checkpoint(
         E.union(E.selectExpr("dst AS src", "src AS dst"))
-        .localCheckpoint(eager=True)
     )
     release_checkpoint(E)
     # localCheckpoint (eager) per iteration: an iterative join's lineage
@@ -1271,9 +1264,9 @@ def connected_components(
     # HERE the extra distinct + anti-join costs more than it saves
     # (compile-dominated at test scale), so the simple full-node loop
     # is the default.
-    labels = nodes.select(
-        F.col(id_col).alias("nid"), F.col(id_col).alias("comp")
-    ).localCheckpoint(eager=True)
+    labels = checkpoint(
+        nodes.select(F.col(id_col).alias("nid"), F.col(id_col).alias("comp"))
+    )
     changed = 0
     for _ in range(max_iter):
         nbr_min = (
@@ -1285,14 +1278,13 @@ def connected_components(
         # the changed flag is computed INLINE while old and new labels
         # are side by side — a separate old-vs-new join per iteration
         # doubled the loop's job count for the same scalar
-        new_labels = (
+        new_labels = checkpoint(
             labels.join(nbr_min, labels.nid == nbr_min.dst, "left")
             .select(
                 "nid",
                 nxt.alias("comp"),
                 (nxt != F.col("comp")).alias("chg"),
             )
-            .localCheckpoint(eager=True)
         )
         changed = new_labels.filter("chg").count()
         # the new checkpoint is materialized (count above consumed it) —
@@ -1644,11 +1636,10 @@ def connected_components_star(
     their own components. Same contract as ``connected_components`` —
     planted-graph equivalence is tested on random graphs.
     """
-    E = (
+    E = checkpoint(
         edges.selectExpr("src AS u", "dst AS v")
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     # small edge sets (the common dedup case — pairs, not corpus) solve
     # exactly on the driver instead of paying contraction rounds
@@ -1695,12 +1686,11 @@ def connected_components_star(
         )
         mins = o.groupBy("u").agg(F.min("v").alias("m"))
         attach = o.join(mins, "u")
-        E = (
+        E = checkpoint(
             attach.select(F.col("v").alias("u"), F.col("m").alias("v"))
             .union(attach.select("u", F.col("m").alias("v")))
             .filter(F.col("u") != F.col("v"))
             .distinct()
-            .localCheckpoint(eager=True)
         )
         # fingerprint's collect materializes the new checkpoint; the
         # superseded round's storage is then released (O(1) in rounds)
@@ -1830,30 +1820,25 @@ def triangle_count(
     shuffles total (degree groupBy, wedge self-join, closure join),
     all on compact long keys.
     """
-    from xngin_spark.operators.dedup import track_checkpoint
-
     # materialize the (possibly expensive) upstream edge pipeline ONCE:
     # deg and oriented below each consumed it separately before, so the
     # winnow self-join behind triangle_dedup_graph executed twice; the
     # count doubles as the driver-path gate
-    e = (
+    e = checkpoint(
         edges.select(F.col("lo").cast("long"), F.col("hi").cast("long"))
-        .localCheckpoint(eager=True)
     )
     if e.count() <= driver_cap:
         out = _driver_triangles(e, id_col)
         if out is not None:
             release_checkpoint(e)
             return out
-    # deg/oriented checkpoints are part of the RETURNED plan, so they
-    # are registered for the session-wide release_persisted() drain
-    # instead of accumulating across a long bench session (ADVICE r9)
-    deg = track_checkpoint(
+    # deg/oriented checkpoints are part of the RETURNED plan: the
+    # caller's storage drain frees them once the result is materialized
+    deg = checkpoint(
         e.select(F.col("lo").alias("nid"))
         .unionByName(e.select(F.col("hi").alias("nid")))
         .groupBy("nid")
         .agg(F.count(F.lit(1)).cast("long").alias("degree"))
-        .localCheckpoint(eager=True)
     )
     # orient: src = endpoint with smaller (degree, id); total order so
     # each triangle {u<v<w in orientation order} yields oriented edges
@@ -1863,7 +1848,7 @@ def triangle_count(
     lo_first = (F.col("dlo") < F.col("dhi")) | (
         (F.col("dlo") == F.col("dhi")) & (F.col("lo") < F.col("hi"))
     )
-    oriented = track_checkpoint(
+    oriented = checkpoint(
         e.join(dl, "lo")
         .join(dh, "hi")
         .select(
@@ -1871,7 +1856,6 @@ def triangle_count(
             F.when(lo_first, F.col("hi")).otherwise(F.col("lo")).alias("dst"),
             F.when(lo_first, F.col("dhi")).otherwise(F.col("dlo")).alias("ddst"),
         )
-        .localCheckpoint(eager=True)
     )
     # deg and oriented are materialized — the edge checkpoint is dead
     release_checkpoint(e)
@@ -2004,11 +1988,9 @@ def kcore_peel(
     """
     import warnings
 
-    from xngin_spark.operators.dedup import track_checkpoint
-
-    e = edges.select(
-        F.col("lo").cast("long"), F.col("hi").cast("long")
-    ).localCheckpoint(eager=True)
+    e = checkpoint(
+        edges.select(F.col("lo").cast("long"), F.col("hi").cast("long"))
+    )
     prev_edges = e.count()
     # Small edge sets peel on the DRIVER (the _driver_components
     # precedent, same cap): the near-dup graph is tiny relative to the
@@ -2037,10 +2019,9 @@ def kcore_peel(
             .agg(F.count(F.lit(1)).cast("long").alias("degree"))
         )
         keep = deg.filter(F.col("degree") >= k).select("nid")
-        new_e = (
+        new_e = checkpoint(
             e.join(keep.select(F.col("nid").alias("lo")), "lo", "left_semi")
             .join(keep.select(F.col("nid").alias("hi")), "hi", "left_semi")
-            .localCheckpoint(eager=True)
         )
         n_edges = new_e.count()
         release_checkpoint(e)
@@ -2055,7 +2036,6 @@ def kcore_peel(
             "raise the `rounds` knob",
             stacklevel=2,
         )
-    track_checkpoint(e)
     return (
         e.select(F.col("lo").alias("nid"))
         .unionByName(e.select(F.col("hi").alias("nid")))

@@ -29,7 +29,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from xngin_spark.operators.textstats import tokens
-from xngin_spark.operators.util import fan_out, values_df
+from xngin_spark.operators.util import (
+    checkpoint,
+    fan_out,
+    persist,
+    release_checkpoint,
+    release_storage,
+    values_df,
+)
 
 # Mersenne prime modulus and deterministic per-permutation constants for
 # the k minhash functions h_i(x) = (a_i * x + b_i) mod P. P = 2³¹−1 keeps
@@ -38,55 +45,10 @@ from xngin_spark.operators.util import fan_out, values_df
 # permutation are noise for dedup purposes).
 _P = (1 << 31) - 1
 
-# DataFrames persisted internally by operators in this module (e.g. the
-# minhash signature cache). Persisted RDDs outlive the returned result
-# in a long-lived session, so callers that loop over many dedup runs
-# should call release_persisted() after materializing each result.
-_PERSISTED: list[DataFrame] = []
-
-
-def release_persisted() -> None:
-    """Unpersist every internally persisted DataFrame (safe anytime:
-    unpersisted lineage recomputes on next use rather than failing)."""
-    while _PERSISTED:
-        _PERSISTED.pop().unpersist()
-
-
-def track_persisted(df: DataFrame) -> DataFrame:
-    """Register an externally persisted DataFrame for release by
-    ``release_persisted()`` — the session-wide storage drain the bench
-    (and any long-lived service) calls between queries. Lets other
-    modules share one release point instead of growing their own."""
-    _PERSISTED.append(df)
-    return df
-
-
-#: localCheckpoint(eager=True) frames that are part of a RETURNED plan
-#: (graph operators' degree/oriented/final-peel caches). Deliberately
-#: NOT in _PERSISTED: release_persisted()'s contract is "safe anytime —
-#: lineage recomputes", and several query wrappers call it BEFORE
-#: returning; a checkpoint has no lineage, so draining it early would
-#: kill the returned plan (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND).
-_CHECKPOINTS: list[DataFrame] = []
-
-
-def track_checkpoint(df: DataFrame) -> DataFrame:
-    """Register a ``localCheckpoint(eager=True)`` DataFrame whose
-    blocks should be freed by :func:`release_checkpoints` once the
-    query's result is FULLY MATERIALIZED (the bench calls it after the
-    noop sink; a service calls it after shipping the result). Until
-    then the blocks must stay — checkpoints cannot recompute."""
-    _CHECKPOINTS.append(df)
-    return df
-
-
-def release_checkpoints() -> None:
-    """Free every tracked returned-plan checkpoint. Only call when no
-    tracked plan will be re-executed — the data is unrecoverable."""
-    from xngin_spark.operators.util import release_checkpoint
-
-    while _CHECKPOINTS:
-        release_checkpoint(_CHECKPOINTS.pop())
+#: Storage drains under their former names, bound to the one per-thread
+#: drain (operators.util.release_storage) for callers that still import
+#: them from here.
+release_persisted = release_checkpoints = release_storage
 
 
 def _perm_consts(k: int, seed: int = 42) -> list[tuple[int, int]]:
@@ -296,21 +258,15 @@ def minhash_lsh_pairs(
     which rarely need pairwise enumeration (dedup wants one keeper per
     cluster, not m² edges).
 
-    The signature cache persisted internally is tracked; call
-    ``release_persisted()`` after materializing the result to free
-    executor storage in long-lived sessions.
+    The signature cache persisted internally is owned by the calling
+    thread; ``operators.util.release_storage()`` frees it once the
+    result is materialized.
     """
     r = k // bands
     # signatures feed banding AND both sides of the verification join —
     # persist so the text is read and hashed exactly once (the standard
     # LSH layout: n × k×8B ≈ 0.5 KB/doc, disk-spillable)
-    from pyspark.storagelevel import StorageLevel
-
-    sigs = track_persisted(
-        minhash_signatures(df, text_col, id_col, k, shingle_n, portable).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-    )
+    sigs = persist(minhash_signatures(df, text_col, id_col, k, shingle_n, portable))
     # materialize eagerly: the banding stage and both verification-join
     # sides consume `sigs`; without a barrier they race the cold cache
     # and each recomputes the signatures
@@ -319,11 +275,7 @@ def minhash_lsh_pairs(
     # persist the (band, bucket, id) rows (24 B each) so the explode +
     # band-hash transform runs once, not three times (measured ~1s per
     # recompute at sf1)
-    banded = track_persisted(
-        _band_buckets(sigs, id_col, k, bands, portable).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-    )
+    banded = persist(_band_buckets(sigs, id_col, k, bands, portable))
     banded.count()
 
     if max_bucket_size is not None:
@@ -752,20 +704,13 @@ def winnow_candidate_pairs(
     """
     # the char-level rolling-hash projection feeds the cap count AND
     # both self-join sides — persist so the text is hashed exactly once
-    # (n × ~30 fp × 16B, disk-spillable; released via release_persisted)
-    from pyspark.storagelevel import StorageLevel
-
-    fps = track_persisted(
-        winnow_fingerprints(df, text_col, id_col, k=k, w=w).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-    )
-    keep = track_persisted(
+    # (n × ~30 fp × 16B, disk-spillable; freed by the caller's drain)
+    fps = persist(winnow_fingerprints(df, text_col, id_col, k=k, w=w))
+    keep = persist(
         fps.groupBy("fp")
         .agg(F.count(F.lit(1)).alias("__df"))
         .filter(F.col("__df") <= max_fp_docs)
         .select("fp")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     if keep.isEmpty():
         import warnings
@@ -1024,16 +969,12 @@ def minhash_index_persist(
     ``minhash_screen`` reads them back, so a screen can never silently
     run with mismatched banding or column names.
     """
-    from pyspark.storagelevel import StorageLevel
-
-    sigs = minhash_signatures(df, text_col, id_col, k, shingle_n).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    sigs = persist(minhash_signatures(df, text_col, id_col, k, shingle_n))
     sigs.write.mode(mode).parquet(f"{path}/sigs")
     _band_buckets(sigs, id_col, k, bands).write.mode(mode).parquet(
         f"{path}/bands"
     )
-    sigs.unpersist()
+    release_checkpoint(sigs)
     # values_df, not createDataFrame: one-row local relations cost a
     # ~4s python->JVM stage per job (operators/util.values_df)
     meta = values_df(
@@ -1085,18 +1026,16 @@ def minhash_index_update(
     k, bands, shingle_n = int(meta["k"]), int(meta["bands"]), int(meta["shingle_n"])
     id_col, text_col = meta["id_col"], meta["text_col"]
 
-    gone = (
-        diff.filter(F.col(op_col).isin("delete", "update"))
-        .select(id_col)
-        .localCheckpoint(eager=True)
+    gone = checkpoint(
+        diff.filter(F.col(op_col).isin("delete", "update")).select(id_col)
     )
     fresh_ids = diff.filter(F.col(op_col).isin("insert", "update")).select(
         id_col
     )
     changed = new_snapshot.join(F.broadcast(fresh_ids), id_col)
-    new_sigs = minhash_signatures(
-        changed, text_col, id_col, k, shingle_n
-    ).localCheckpoint(eager=True)
+    new_sigs = checkpoint(
+        minhash_signatures(changed, text_col, id_col, k, shingle_n)
+    )
     new_bands = _band_buckets(new_sigs, id_col, k, bands)
 
     from xngin_spark.sources.dml import scrub_rows
@@ -1145,7 +1084,6 @@ def minhash_screen(
     verification. Corpus text is never read.
     """
     from pyspark.errors import AnalysisException
-    from pyspark.storagelevel import StorageLevel
 
     spark = new_df.sparkSession
     try:
@@ -1157,11 +1095,7 @@ def minhash_screen(
         ) from exc
     k, bands, shingle_n = int(meta["k"]), int(meta["bands"]), int(meta["shingle_n"])
     stored_id = meta["id_col"]
-    nsig = track_persisted(
-        minhash_signatures(new_df, text_col, id_col, k, shingle_n).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-    )
+    nsig = persist(minhash_signatures(new_df, text_col, id_col, k, shingle_n))
     nsig.count()
     nband = _band_buckets(nsig, id_col, k, bands).select(
         F.col(id_col).alias("new_id"), "band", "bucket"

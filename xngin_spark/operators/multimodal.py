@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from xngin_spark.operators.util import checkpoint
+
 if TYPE_CHECKING:  # pandas imported lazily inside the UDF workers
     import pandas as pd
 
@@ -347,7 +349,7 @@ def phash_dup_pairs(
     """
     nblocks = max_hamming + 1
     width = bits // nblocks
-    pinned = sigs.localCheckpoint(eager=True)
+    pinned = checkpoint(sigs)
     parts = []
     for blk in range(nblocks):
         lo = blk * width

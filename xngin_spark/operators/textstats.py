@@ -97,15 +97,6 @@ def fingerprint_xx64(text: Column) -> Column:
     return F.xxhash64(text)
 
 
-def rolling_fingerprints(text: Column, window: int = 16, step: int = 8) -> Column:
-    """Array of hashes over sliding character windows — content-defined
-    chunk fingerprints for partial-overlap detection. JVM-side via
-    transform(sequence(...)); no UDF."""
-    n = F.length(text)
-    starts = F.sequence(F.lit(1), F.greatest(n - window + 1, F.lit(1)), F.lit(step))
-    return F.transform(starts, lambda i: F.xxhash64(F.substring(text, i, window)))
-
-
 def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     """One-pass enrichment with every stat column — single projection,
     no shuffle, codegen'd."""

@@ -3,7 +3,9 @@
 from __future__ import annotations
 
 import math
+import threading
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -96,27 +98,83 @@ def fan_out(df: DataFrame, factor: int = 1) -> DataFrame:
     return df.repartition(target)
 
 
+#: Storage-holding frames (persisted or locally checkpointed), one list
+#: per thread. Whoever creates such a frame owns its release: a local
+#: checkpoint has no lineage, so only its creator knows when its data is
+#: dead, and nothing frees the blocks while the Dataset stays reachable.
+#: Per-thread lists let a server connection or a ``foreachBatch``
+#: callback thread drain exactly what it created, never another thread's
+#: still-running plan.
+_owned = threading.local()
+
+
+def _frames() -> list[DataFrame]:
+    frames = getattr(_owned, "frames", None)
+    if frames is None:
+        frames = _owned.frames = []
+    return frames
+
+
+def checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
+    """``df.localCheckpoint(eager)`` owned by the calling thread: freed
+    early by :func:`release_checkpoint`, else by the thread's
+    :func:`release_storage` once the work that reads it has finished."""
+    out = df.localCheckpoint(eager=eager)
+    _frames().append(out)
+    return out
+
+
+def persist(df: DataFrame) -> DataFrame:
+    """``df.persist(MEMORY_AND_DISK)`` owned by the calling thread (see
+    :func:`checkpoint`)."""
+    out = df.persist(StorageLevel.MEMORY_AND_DISK)
+    _frames().append(out)
+    return out
+
+
+def _free(df: DataFrame) -> None:
+    if df.is_cached:
+        df.unpersist()
+        return
+    # ``df.rdd.unpersist()`` is a no-op on a checkpoint: ``.rdd``
+    # deserializes a NEW RDD over the checkpointed plan, and unpersisting
+    # that wrapper leaves the persisted internal RDD in the block manager.
+    # The persisted RDD is the one the checkpointed Dataset's
+    # ``LogicalRDD`` leaf carries.
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.nodeName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
+
+
 def release_checkpoint(df: DataFrame) -> None:
-    """Release the storage held by a ``localCheckpoint(eager=True)``
-    DataFrame once it is no longer needed.
+    """Free one persisted or checkpointed frame now and drop it from the
+    calling thread's list. Iterative operators call this per superseded
+    iteration so storage stays O(1) in iteration count.
 
-    ``df.rdd.unpersist()`` is a no-op here: ``.rdd`` deserializes a NEW
-    RDD over the checkpointed plan, and unpersisting that fresh wrapper
-    leaves the actually-persisted internal RDD in the block manager
-    (verified via ``sc.getPersistentRDDs``). The persisted RDD is the
-    one the checkpointed Dataset's ``LogicalRDD`` leaf carries — grab
-    that handle and unpersist it. Iterative operators (connected
-    components, k-means) call this per superseded iteration so storage
-    stays O(1) in iteration count instead of accumulating one
-    checkpoint per round.
+    A frame that holds no storage (neither persisted nor a checkpoint's
+    ``LogicalRDD``) is a no-op; JVM errors propagate. Only call on a
+    frame whose data is truly dead: a checkpoint cannot be recomputed
+    after release."""
+    frames = _frames()
+    for i, f in enumerate(frames):
+        if f is df:
+            del frames[i]
+            break
+    _free(df)
 
-    Only call on a DataFrame whose data is truly dead: a locally
-    checkpointed RDD has no lineage and cannot be recomputed after
-    unpersisting.
-    """
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.nodeName() == "LogicalRDD":
-            plan.rdd().unpersist(False)
-    except Exception:
-        pass  # release is best-effort; never fail the query over cleanup
+
+def release_storage() -> None:
+    """Free every frame the calling thread owns. Call where the work
+    ends: after a query's result is fully materialized or shipped, at
+    the end of a test, or in a ``foreachBatch`` body's ``finally``.
+    Every frame is freed even if one fails; the first error is then
+    re-raised."""
+    frames = _frames()
+    first = None
+    while frames:
+        try:
+            _free(frames.pop())
+        except Exception as e:
+            first = first or e
+    if first is not None:
+        raise first

@@ -26,6 +26,8 @@ from collections import OrderedDict
 
 from pyspark.sql import DataFrame
 
+from xngin_spark.operators.util import checkpoint
+
 
 class Unreflectable(Exception):
     """This plan contains a node or shape with no faithful SQL render."""
@@ -60,11 +62,11 @@ def _output_key(jnode_or_plan) -> tuple[int, ...]:
 
 
 def reflect_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
-    """``df.localCheckpoint(eager)`` that stays reflectable: records
-    the pre-checkpoint analyzed plan so reflect_sql renders through
-    the barrier instead of raising on the LogicalRDD."""
+    """``operators.util.checkpoint(df, eager)`` that stays reflectable:
+    records the pre-checkpoint analyzed plan so reflect_sql renders
+    through the barrier instead of raising on the LogicalRDD."""
     original = df._jdf.queryExecution().analyzed()
-    out = df.localCheckpoint(eager=eager)
+    out = checkpoint(df, eager=eager)
     key = _output_key(out._jdf.queryExecution().analyzed())
     _BARRIERS[key] = original
     _BARRIERS.move_to_end(key)

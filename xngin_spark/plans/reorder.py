@@ -39,7 +39,7 @@ edges (never a cartesian) with greedily-minimal intermediate sizes.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -172,14 +172,6 @@ def _combine_rows(kind: str, rl: float, rr: float, sel: float) -> float:
     if kind == "anti":
         return max(1.0, rl - min(rl, m))
     raise ValueError(kind)
-
-
-@dataclass
-class _Comp:
-    names: frozenset[str]
-    rows: float
-    df: DataFrame | None = None
-    order: list = field(default_factory=list)  # merge trace (for tests)
 
 
 def _edge_selectivity(

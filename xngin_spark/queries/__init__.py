@@ -32,10 +32,11 @@ def register(name: str, oracle: str | None = None):
 
 
 def load_all() -> None:
-    """Import all query modules so their registrations run."""
-    from xngin_spark.queries import tpch  # noqa: F401
-
+    """Import all query modules so their registrations run. A module
+    that fails to import raises: its queries must not silently drop out
+    of the bench, the tests and the oracle sweep."""
     for mod in (
+        "tpch",
         "micro",
         "pipeline",
         "windows",
@@ -44,7 +45,4 @@ def load_all() -> None:
         "bucketed",
         "sqlsurface",
     ):
-        try:
-            __import__(f"xngin_spark.queries.{mod}")
-        except ImportError:
-            pass
+        __import__(f"xngin_spark.queries.{mod}")

@@ -345,23 +345,19 @@ def hll_partitioned_distinct(spark, sf_dir):
     Rows-only in the gate (sketch estimates are engine-specific);
     tests/test_analytic.py bounds the error and proves merge-of-parts
     equals the direct whole-table sketch."""
-    from pyspark.storagelevel import StorageLevel
-
-    from xngin_spark.operators.dedup import track_persisted
+    from xngin_spark.operators.util import persist
 
     d = T(spark, sf_dir, "documents")
     # persist: both union branches (per-source rows AND the merged
     # __ALL__ row) consume this frame — without the pin each branch
     # re-scans and re-sketches the table (review finding: 2x the I/O
     # for a query whose point is that rollups touch only sketches);
-    # released by the bench's release_persisted() drain
-    per = track_persisted(
-        d.groupBy("source")
-        .agg(
+    # freed by the caller's storage drain once the result is materialized
+    per = persist(
+        d.groupBy("source").agg(
             F.hll_sketch_agg(F.xxhash64("text")).alias("sk"),
             F.countDistinct("text").alias("exact_distinct"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     per_rows = per.select(
         "source",

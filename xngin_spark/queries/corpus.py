@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from xngin_spark.operators import corpus as C
-from xngin_spark.operators.util import fan_out, values_df
+from xngin_spark.operators.util import checkpoint, fan_out, values_df
 from xngin_spark.queries import register
 from xngin_spark.queries.tpch import T
 
@@ -567,7 +567,7 @@ def bloom_seen_filter(spark, sf_dir):
     m, k = optimal_params(n_prev, 0.01)
     # pin the tiny filter once: each of the k probe joins broadcasts it,
     # and without materialization each branch re-runs the build agg
-    bloom = bloom_build(prev, "text", m, k).localCheckpoint(eager=True)
+    bloom = checkpoint(bloom_build(prev, "text", m, k))
     return bloom_might_contain(cur, "text", bloom, m, k).select(
         "doc_id", "might_contain"
     )
@@ -611,9 +611,7 @@ def bloom_seen_checked(spark, sf_dir):
     d = T(spark, sf_dir, "documents")
     prev = d.filter(F.col("doc_id") % 3 == 0).select("text")
     cur = d.filter(F.col("doc_id") % 3 != 0).select("doc_id", "text")
-    bloom = bloom_build(prev, "text", m, k, portable=True).localCheckpoint(
-        eager=True
-    )
+    bloom = checkpoint(bloom_build(prev, "text", m, k, portable=True))
     return bloom_might_contain(cur, "text", bloom, m, k, portable=True).select(
         "doc_id", "might_contain"
     )

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from xngin_spark.functions.aggregates import DEC, count_star, dsum, dsum_expr
 from xngin_spark.functions.scalar import int_div
+from xngin_spark.operators.util import checkpoint
 from xngin_spark.plans.builders import limit as limit_op
 from xngin_spark.plans.builders import row as row_op
 from xngin_spark.plans.builders import setop, sort
@@ -1512,9 +1513,9 @@ def incremental_agg_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and maintain_agg consumes it in several branches (adjustments,
     # insert extrema, destructive probe, affected groups) — without
     # this the full-outer diff join re-executes per branch
-    changes = cdc_changes(
-        v1, v2, ["o_orderkey"], cols=["o_orderpriority", "o_totalprice"]
-    ).localCheckpoint(eager=True)
+    changes = checkpoint(
+        cdc_changes(v1, v2, ["o_orderkey"], cols=["o_orderpriority", "o_totalprice"])
+    )
     out = maintain_agg(
         agg_snapshot(v1, "o_orderpriority", "o_totalprice"),
         changes,
@@ -1592,9 +1593,9 @@ def orders_stream_agg_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     # discipline): each of the three chunk writes below filters
     # `changes`, and without the checkpoint every write re-executes the
     # full-outer diff join — 3x the scan+join for identical rows
-    changes = cdc_changes(
-        v1, v2, ["o_orderkey"], cols=["o_orderpriority", "o_totalprice"]
-    ).localCheckpoint(eager=True)
+    changes = checkpoint(
+        cdc_changes(v1, v2, ["o_orderkey"], cols=["o_orderpriority", "o_totalprice"])
+    )
     root = tempfile.mkdtemp(prefix="xngin_aggmaint_")
     delta_dir = os.path.join(root, "delta")
     rollup = os.path.join(root, "rollup")
@@ -1629,14 +1630,13 @@ def orders_stream_agg_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeout_s=120,
         )
         final = _latest_rollup_epoch(rollup)
-        out = (
+        out = checkpoint(
             spark.read.parquet(os.path.join(rollup, f"epoch={final}"))
             .select(
                 "o_orderpriority",
                 "cnt",
                 F.col("total_dec").cast("double").alias("total"),
             )
-            .localCheckpoint(eager=True)
         )
     finally:
         spark.conf.set(key, old_sp)
@@ -1819,12 +1819,14 @@ def incremental_agg_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    changes = cdc_changes(
-        v1,
-        v2,
-        ["l_orderkey", "l_linenumber"],
-        cols=["l_returnflag", "l_quantity", "l_extendedprice"],
-    ).localCheckpoint(eager=True)
+    changes = checkpoint(
+        cdc_changes(
+            v1,
+            v2,
+            ["l_orderkey", "l_linenumber"],
+            cols=["l_returnflag", "l_quantity", "l_extendedprice"],
+        )
+    )
     out = maintain_agg_multi(
         agg_snapshot_multi(v1, "l_returnflag", ["l_quantity", "l_extendedprice"]),
         changes,
@@ -1902,9 +1904,9 @@ def incremental_distinct_maintain(spark: SparkSession, sf_dir: str) -> DataFrame
             )
         )
     )
-    changes = cdc_changes(
-        v1, v2, ["o_orderkey"], cols=["o_orderpriority", "o_custkey"]
-    ).localCheckpoint(eager=True)
+    changes = checkpoint(
+        cdc_changes(v1, v2, ["o_orderkey"], cols=["o_orderpriority", "o_custkey"])
+    )
     state = maintain_distinct_state(
         distinct_state(v1, "o_orderpriority", "o_custkey"),
         changes,

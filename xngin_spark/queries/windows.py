@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from xngin_spark.catalog import events_df
 from xngin_spark.functions.aggregates import DEC, count_star, dsum, dsum_expr
+from xngin_spark.operators.util import checkpoint
 from xngin_spark.queries import register
 
 
@@ -1020,7 +1021,7 @@ def events_concurrent_sessions(spark, sf_dir):
     from xngin_spark.operators.temporal import interval_overlap_join
 
     e = events_df(spark, sf_dir)
-    sess = (
+    sess = checkpoint(
         e.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(
             F.min("ts").alias("session_start"),
@@ -1032,15 +1033,11 @@ def events_concurrent_sessions(spark, sf_dir):
         # not dedupe the session-window agg across them — materialize
         # the #sessions-sized frame once (measured 20-30% interleaved,
         # hash-identical output)
-        .localCheckpoint(eager=True)
     )
-    # the checkpoint is part of the RETURNED plan: register it so
-    # release_checkpoints() (bench / tests / services) frees the blocks
-    # after full materialization instead of pinning one #sessions-sized
-    # frame per invocation in a long-lived session (ADVICE r11)
-    from xngin_spark.operators.dedup import track_checkpoint
-
-    sess = track_checkpoint(sess)
+    # the checkpoint is part of the RETURNED plan: the caller's storage
+    # drain (bench / tests / server) frees the blocks after full
+    # materialization instead of pinning one #sessions-sized frame per
+    # invocation in a long-lived session (ADVICE r11)
     overlap = interval_overlap_join(
         sess, sess, start="session_start", end="session_end"
     ).filter(F.col("user_id") != F.col("user_id_r"))

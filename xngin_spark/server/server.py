@@ -32,6 +32,7 @@ import threading
 
 from pyspark.sql import DataFrame
 
+from xngin_spark.operators.util import release_storage
 from xngin_spark.server import protocol as P
 
 
@@ -204,32 +205,38 @@ class MySQLServer:
             cmd, body = payload[0], payload[1:]
             if cmd == P.COM_QUIT:
                 return
-            if cmd == P.COM_PING:
-                P.write_packet(conn, seq + 1, P.build_ok())
-            elif cmd == P.COM_INIT_DB:
-                self._run_query(
-                    conn, seq, f"USE {body.decode(errors='replace')}", session
-                )
-            elif cmd == P.COM_QUERY:
-                self._run_query(
-                    conn, seq, body.decode(errors="replace"), session
-                )
-            elif cmd == P.COM_FIELD_LIST:
-                self._field_list(conn, seq, body)
-            elif cmd == P.COM_STMT_PREPARE:
-                self._stmt_prepare(conn, seq, body, stmts, next_stmt)
-            elif cmd == P.COM_STMT_EXECUTE:
-                self._stmt_execute(conn, seq, body, stmts, session)
-            elif cmd == P.COM_STMT_CLOSE:
-                # no response by spec
-                if len(body) >= 4:
-                    stmts.pop(int.from_bytes(body[:4], "little"), None)
-            elif cmd == P.COM_STMT_RESET:
-                P.write_packet(conn, seq + 1, P.build_ok())
-            else:
-                P.write_packet(
-                    conn, seq + 1, P.build_err(1047, f"unsupported command {cmd:#x}")
-                )
+            try:
+                if cmd == P.COM_PING:
+                    P.write_packet(conn, seq + 1, P.build_ok())
+                elif cmd == P.COM_INIT_DB:
+                    self._run_query(
+                        conn, seq, f"USE {body.decode(errors='replace')}", session
+                    )
+                elif cmd == P.COM_QUERY:
+                    self._run_query(
+                        conn, seq, body.decode(errors="replace"), session
+                    )
+                elif cmd == P.COM_FIELD_LIST:
+                    self._field_list(conn, seq, body)
+                elif cmd == P.COM_STMT_PREPARE:
+                    self._stmt_prepare(conn, seq, body, stmts, next_stmt)
+                elif cmd == P.COM_STMT_EXECUTE:
+                    self._stmt_execute(conn, seq, body, stmts, session)
+                elif cmd == P.COM_STMT_CLOSE:
+                    # no response by spec
+                    if len(body) >= 4:
+                        stmts.pop(int.from_bytes(body[:4], "little"), None)
+                elif cmd == P.COM_STMT_RESET:
+                    P.write_packet(conn, seq + 1, P.build_ok())
+                else:
+                    P.write_packet(
+                        conn, seq + 1, P.build_err(1047, f"unsupported command {cmd:#x}")
+                    )
+            finally:
+                # the result is shipped: free what this command
+                # persisted or checkpointed. Storage is owned per
+                # thread, so this never frees another connection's plans.
+                release_storage()
 
     # ---- prepared statements (binary protocol) -----------------------------
 

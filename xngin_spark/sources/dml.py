@@ -35,6 +35,8 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from xngin_spark.operators.util import checkpoint, release_checkpoint
+
 
 def _where_col(where: Column | str) -> Column:
     return F.expr(where) if isinstance(where, str) else where
@@ -222,10 +224,12 @@ def merge_into(
     # keys present in BOTH sides — bounded by the source size, so
     # collect-free and broadcastable (drives the insert-vs-replace split)
     matched_keys = (
-        spark.read.parquet(*affected).join(F.broadcast(key_rows), keys, "leftsemi")
-        .select(*keys)
-        .distinct()
-        .localCheckpoint(eager=True)
+        checkpoint(
+            spark.read.parquet(*affected)
+            .join(F.broadcast(key_rows), keys, "leftsemi")
+            .select(*keys)
+            .distinct()
+        )
         if affected
         else None
     )
@@ -257,8 +261,6 @@ def merge_into(
         to_insert.write.mode("append").parquet(path)
     spark.catalog.refreshByPath(path)
     if matched_keys is not None:
-        from xngin_spark.operators.util import release_checkpoint
-
         release_checkpoint(matched_keys)
     return {
         "files_rewritten": len(affected) if when_matched == "update" else 0,
@@ -346,18 +348,16 @@ def merge_scd2(
     joined = src.join(cur, keys, "left")
     # null-safe struct compare: a key is "changed" when present in the
     # target (semi join) AND any payload column differs
-    changed_keys = (
+    changed_keys = checkpoint(
         joined.join(target.filter(F.col("is_current")).select(*keys), keys, "leftsemi")
         .filter(~sp.eqNullSafe(tp))
         .select(*keys)
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    new_keys = (
+    new_keys = checkpoint(
         src.select(*keys)
         .join(target.filter(F.col("is_current")).select(*keys), keys, "left_anti")
         .distinct()
-        .localCheckpoint(eager=True)
     )
     # files holding a changed key's current row
     affected = [
@@ -404,8 +404,6 @@ def merge_scd2(
     if rows_inserted:
         inserts.write.mode("append").parquet(path)
     spark.catalog.refreshByPath(path)
-    from xngin_spark.operators.util import release_checkpoint
-
     release_checkpoint(changed_keys)
     release_checkpoint(new_keys)
     return {

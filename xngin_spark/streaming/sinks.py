@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.errors import AnalysisException
 
+from xngin_spark.operators.util import checkpoint, release_storage
+
 #: Per-micro-batch phase timings of the maintenance sinks (the
 #: round-8 verdict asked for the micro-batch FLOOR itemized: epoch
 #: write, scrub, state commit — so continuous-run latency is
@@ -67,6 +69,22 @@ def _phase_rec(sink: str, batch_id: int) -> dict | None:
     return rec
 
 
+def _draining(body):
+    """Wrap a ``foreachBatch`` body so it frees the storage it created
+    once the batch ends. Bodies run on py4j callback threads, which the
+    driver thread's drain never reaches (operators.util owns frames per
+    thread). State carried across batches lives in the sink's files
+    (epochs, index tables), never in a batch's checkpoints."""
+
+    def run(batch_df: DataFrame, batch_id: int) -> None:
+        try:
+            body(batch_df, batch_id)
+        finally:
+            release_storage()
+
+    return run
+
+
 def incremental_window_counts(
     sdf: DataFrame,
     path: str,
@@ -105,7 +123,7 @@ def incremental_window_counts(
         )
 
     q = (
-        agg.writeStream.foreachBatch(upsert)
+        agg.writeStream.foreachBatch(_draining(upsert))
         .outputMode("update")
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
@@ -151,7 +169,7 @@ def incremental_ivf_index(
         )
 
     q = (
-        assigned.writeStream.foreachBatch(write_batch)
+        assigned.writeStream.foreachBatch(_draining(write_batch))
         .outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
@@ -205,7 +223,7 @@ def streaming_ingest_admit(
     )
 
     def admit(batch_df: DataFrame, batch_id: int) -> None:
-        batch = batch_df.dropDuplicates([id_col]).localCheckpoint(eager=True)
+        batch = checkpoint(batch_df.dropDuplicates([id_col]))
         if not batch.head(1):
             return
         dup_ids = (
@@ -219,9 +237,7 @@ def streaming_ingest_admit(
             .select(F.col("new_id").alias(id_col))
             .distinct()
         )
-        admitted = batch.join(
-            F.broadcast(dup_ids), id_col, "left_anti"
-        ).localCheckpoint(eager=True)
+        admitted = checkpoint(batch.join(F.broadcast(dup_ids), id_col, "left_anti"))
         admitted.write.mode("overwrite").parquet(
             f"{corpus_path}/batch={batch_id}"
         )
@@ -231,7 +247,7 @@ def streaming_ingest_admit(
         minhash_index_update(admitted, diff, index_path)
 
     q = (
-        sdf.writeStream.foreachBatch(admit)
+        sdf.writeStream.foreachBatch(_draining(admit))
         .outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
@@ -281,12 +297,10 @@ def streaming_vector_ingest_admit(
 
     def admit(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        batch = batch_df.dropDuplicates([id_col]).localCheckpoint(eager=True)
+        batch = checkpoint(batch_df.dropDuplicates([id_col]))
         if not batch.head(1):
             return
-        assigned = ivf_index(batch, centroids, vec_col).localCheckpoint(
-            eager=True
-        )
+        assigned = checkpoint(ivf_index(batch, centroids, vec_col))
         lists = [
             r["ivf_list"]
             for r in assigned.select("ivf_list").distinct().collect()
@@ -323,9 +337,7 @@ def streaming_vector_ingest_admit(
             .select(F.col("new_id").alias(id_col))
             .distinct()
         )
-        admitted = batch.join(
-            F.broadcast(dup_ids), id_col, "left_anti"
-        ).localCheckpoint(eager=True)
+        admitted = checkpoint(batch.join(F.broadcast(dup_ids), id_col, "left_anti"))
         admitted.write.mode("overwrite").parquet(
             f"{corpus_path}/batch={batch_id}"
         )
@@ -337,7 +349,7 @@ def streaming_vector_ingest_admit(
         )
 
     q = (
-        sdf.writeStream.foreachBatch(admit)
+        sdf.writeStream.foreachBatch(_draining(admit))
         .outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
@@ -387,7 +399,7 @@ def apply_cdc_rollup_batch(
     spark = batch_df.sparkSession
     rec = _phase_rec("rollup", batch_id)
     with _phase(rec, "dedup_checkpoint"):
-        batch = batch_df.dropDuplicates(key_cols).localCheckpoint(eager=True)
+        batch = checkpoint(batch_df.dropDuplicates(key_cols))
     prior = _latest_rollup_epoch(rollup_path, below=batch_id)
     if prior is None:
         raise ValueError(
@@ -435,7 +447,7 @@ def apply_cdc_rollup_batch_multi(
     from xngin_spark.sources.dml import maintain_agg_additive_multi
 
     spark = batch_df.sparkSession
-    batch = batch_df.dropDuplicates(key_cols).localCheckpoint(eager=True)
+    batch = checkpoint(batch_df.dropDuplicates(key_cols))
     prior = _latest_rollup_epoch(rollup_path, below=batch_id)
     if prior is None:
         raise ValueError(
@@ -460,40 +472,6 @@ def apply_cdc_rollup_batch_multi(
             continue
         if e < prior:
             _shutil.rmtree(p, ignore_errors=True)
-
-
-def streaming_agg_maintain_multi(
-    change_stream: DataFrame,
-    rollup_path: str,
-    checkpoint_dir: str,
-    group_col: str,
-    val_cols: list[str],
-    key_cols: list[str],
-    timeout_s: int = 180,
-) -> None:
-    """Multi-measure :func:`streaming_agg_maintain`: a k-measure
-    maintained materialized view costs one maintenance round per
-    micro-batch, not k — same epoch protocol, same replay
-    convergence, same seed contract (epoch=-1 holding the
-    maintain_agg_additive_multi-shaped state)."""
-
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        apply_cdc_rollup_batch_multi(
-            batch_df, batch_id, rollup_path, group_col, val_cols, key_cols
-        )
-
-    q = (
-        change_stream.writeStream.foreachBatch(apply)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(
-            f"agg-maintain-multi sink did not finish in {timeout_s}s"
-        )
 
 
 def streaming_agg_maintain(
@@ -526,7 +504,7 @@ def streaming_agg_maintain(
         )
 
     q = (
-        change_stream.writeStream.foreachBatch(apply)
+        change_stream.writeStream.foreachBatch(_draining(apply))
         .outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
@@ -567,7 +545,7 @@ def apply_cdc_bm25_batch(
     meta = spark.read.json(f"{index_path}/_meta").head()
     id_col, text_col = meta["id_col"], meta["text_col"]
     with _phase(rec, "dedup_checkpoint"):
-        b = batch_df.dropDuplicates([id_col]).localCheckpoint(eager=True)
+        b = checkpoint(batch_df.dropDuplicates([id_col]))
     if not b.head(1):
         return
     snapshot_like = b.filter(F.col("op").isin("insert", "update")).select(
@@ -604,7 +582,7 @@ def streaming_bm25_maintain(
         )
 
     q = (
-        change_stream.writeStream.foreachBatch(apply)
+        change_stream.writeStream.foreachBatch(_draining(apply))
         .outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
